@@ -5,7 +5,14 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Python workers (data sources, UDFs) inherit the JVM's environment, not
+# this process's sys.path: put the repo on PYTHONPATH before get_spark
+# starts the JVM, so tests pass from any working directory
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 from timestream_travel_spark import get_spark
 

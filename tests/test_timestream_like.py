@@ -5,13 +5,21 @@ Python DataSource, exercising all four recursive type constructors
 from __future__ import annotations
 
 import json
+import os
+import random
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
 
 from timestream_travel_spark.sources.timestream_like import (
+    MAX_PARTITION_BYTES,
+    OPEN_COST_BYTES,
     TimestreamLikeDataSource,
+    _decode_pages,
     decode_datum,
+    pack_pages,
     process_row,
 )
 
@@ -98,8 +106,9 @@ def test_connector_reads_pages(spark, tmp_path):
     assert df.columns == ["time", "measure_name", "value", "tags", "dims", "series"]
     rows = df.collect()
     assert len(rows) == total
-    # page-parallel read: one task per page
-    assert df.rdd.getNumPartitions() == 3
+    # three small pages pack into one read partition, in page order
+    assert df.rdd.getNumPartitions() == 1
+    assert [r["value"] for r in rows] == [str(round(i * 1.5, 2)) for i in range(total)]
     # faithful NULL rendering survives the connector
     assert df.filter(F.col("measure_name") == "NULL").count() == total // 3
     # nested columns arrive as deterministic JSON
@@ -215,3 +224,90 @@ def test_connector_stream_matches_batch(spark, tmp_path):
     shutil.copy(f"{src}/page-000.json", f"{src}/page-900.json")
     run_once()
     assert spark.read.parquet(out).count() == total + 10
+
+
+MiB = 1024 * 1024
+
+
+def _sized_pages(tmp_path, sizes):
+    """Sparse page files of the given byte sizes (content is never
+    parsed): large sizes cost no disk."""
+    paths = []
+    for i, n in enumerate(sizes):
+        path = tmp_path / f"page-{i:05d}.json"
+        with open(path, "wb") as fh:
+            fh.truncate(n)
+        paths.append(str(path))
+    return paths
+
+
+def _cost(page):
+    return os.path.getsize(page) + OPEN_COST_BYTES
+
+
+def test_pack_pages_runs_are_contiguous_and_within_budget(tmp_path):
+    rng = random.Random(7)
+    pages = _sized_pages(tmp_path, [rng.randint(0, 60 * MiB) for _ in range(60)])
+    runs = pack_pages(pages)
+    # concatenated runs are the page list itself: contiguous, in order
+    assert [p for run in runs for p in run] == pages
+    for i, run in enumerate(runs):
+        assert sum(map(_cost, run)) <= MAX_PARTITION_BYTES
+        if i + 1 < len(runs):  # a run closes only when the next page would not fit
+            assert sum(map(_cost, run)) + _cost(runs[i + 1][0]) > MAX_PARTITION_BYTES
+
+
+def test_pack_pages_open_cost_caps_small_pages(tmp_path):
+    # every page costs at least the 4 MiB open cost, so at most 31
+    # one-byte pages fit a 128 MiB run: 32 would be 128 MiB + 32 bytes
+    runs = pack_pages(_sized_pages(tmp_path, [1] * 40))
+    assert [len(r) for r in runs] == [31, 9]
+
+
+def test_pack_pages_oversized_page_runs_alone(tmp_path):
+    pages = _sized_pages(tmp_path, [1024, 1024, 200 * MiB, 1024, 1024])
+    assert pack_pages(pages) == [pages[:2], [pages[2]], pages[3:]]
+    assert pack_pages([]) == []
+
+
+def test_empty_page_does_not_stop_a_run(tmp_path):
+    column_info = [{"Name": "v", "Type": {"ScalarType": "VARCHAR"}}]
+    pages = []
+    for i, rows in enumerate([["a", "b"], [], ["c"]]):
+        path = tmp_path / f"page-{i:05d}.json"
+        path.write_text(json.dumps({
+            "ColumnInfo": column_info,
+            "Rows": [{"Data": [_scalar(v)]} for v in rows],
+        }))
+        pages.append(str(path))
+    runs = pack_pages(pages)
+    assert runs == [pages]
+    assert list(_decode_pages(runs[0], ["v"])) == [("a",), ("b",), ("c",)]
+
+
+def test_connector_reads_utf8_pages(spark, tmp_path):
+    """Pages are UTF-8 JSON whatever the reading process's locale: a
+    non-ASCII ScalarValue written as raw UTF-8 bytes reads back
+    unchanged, through Spark and under an ASCII-only locale."""
+    text = "Zürich – 東京 ✓"
+    src = tmp_path / "pages"
+    src.mkdir()
+    (src / "page-00000.json").write_bytes(json.dumps({
+        "ColumnInfo": [{"Name": "city", "Type": {"ScalarType": "VARCHAR"}}],
+        "Rows": [{"Data": [_scalar(text)]}],
+    }, ensure_ascii=False).encode("utf-8"))
+    spark.dataSource.register(TimestreamLikeDataSource)
+    df = spark.read.format("timestream_like").option("path", str(src)).load()
+    assert [r["city"] for r in df.collect()] == [text]
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, LC_ALL="C", PYTHONUTF8="0", PYTHONCOERCECLOCALE="0", PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import json, sys\n"
+         "from timestream_travel_spark.sources.timestream_like import _decode_pages\n"
+         "print(json.dumps(list(_decode_pages([sys.argv[1]], ['city']))))",
+         str(src / "page-00000.json")],
+        env=env, capture_output=True, text=True, check=True,
+    )
+    assert json.loads(out.stdout) == [[text]]

@@ -17,7 +17,7 @@ is the operator's problem). Both gaps close here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from timestream_travel_spark.pipeline.backup import BackupConfig, backup
@@ -90,7 +90,10 @@ def restore_backup(
       reconciliation for overlapping window exports from legacy
       (pre-epoch-us) manifests;
     - distributed end-to-end: one scan of the backup, one optional
-      window, one parquet write. Returns {rows_in, rows_out}."""
+      window, one parquet write, then a count of what landed.
+      Returns {rows_in, rows_out}: rows_in is counted by an
+      Observation on the write job (no extra scan), before dedup;
+      rows_out is read back from the written parquet."""
     raw = spark.read.json(f"{backup_dir}/__part=*/__date=*/*.json.gz")
     df = _fold_null_sentinels(raw)
     if schema:
@@ -100,7 +103,8 @@ def restore_backup(
         df = df.select(
             *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
         )
-    rows_in = df.count()
+    observed = Observation()
+    df = df.observe(observed, F.count(F.lit(1)).alias("rows_in"))
     if dedup_key:
         from pyspark.sql import Window
 
@@ -109,7 +113,7 @@ def restore_backup(
         df = df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
     df.write.mode("overwrite").parquet(dest)
     rows_out = spark.read.parquet(dest).count()
-    return {"rows_in": rows_in, "rows_out": rows_out}
+    return {"rows_in": observed.get["rows_in"], "rows_out": rows_out}
 
 
 def verify_reference_layout(spark: SparkSession, dest: str) -> DataFrame:

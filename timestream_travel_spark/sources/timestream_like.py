@@ -18,8 +18,13 @@ scalar columns as strings (faithful), nested columns as JSON strings.
 Schema comes from the first page's ColumnInfo — dynamic, never
 declared (SURVEY.md §1.1).
 
-Spark integration: the DataSource V2 Python API; one InputPartition
-per page file, so page-parallelism is task-parallelism (the
+Spark integration: the DataSource V2 Python API. Pages are packed,
+in page order, into contiguous runs, one InputPartition each, with
+Spark's own file-split rule: a page costs its file size plus a 4 MiB
+open cost, a run closes before it would exceed 128 MiB, and a larger
+page is a run of its own. A task decodes its run page by page, so a
+result of many small pages costs a few Python tasks, not one per page,
+while a large result still fans out across cores (the
 goroutine-per-partition of cmd/backup.go:228-231, without threads).
 
 Usage:
@@ -31,6 +36,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 from typing import Any
 
 from pyspark.sql.datasource import (
@@ -42,6 +48,11 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StringType, StructField, StructType
 
 NULL_STR = "NULL"  # helpers.go:5-10
+
+# Spark's file-split defaults: spark.sql.files.maxPartitionBytes and
+# spark.sql.files.openCostInBytes
+MAX_PARTITION_BYTES = 128 * 1024 * 1024
+OPEN_COST_BYTES = 4 * 1024 * 1024
 
 
 # ----------------------------------------------------------- decoders
@@ -90,8 +101,47 @@ def decode_datum(datum: dict[str, Any], col_type: dict[str, Any]) -> Any:
 
 
 def _read_page(path: str) -> dict[str, Any]:
-    with open(path) as fh:
-        return json.load(fh)
+    # bytes, not text: json.loads detects the UTF-8 encoding itself,
+    # whatever the worker's locale
+    with open(path, "rb") as fh:
+        return json.loads(fh.read())
+
+
+def pack_pages(pages: list[str]) -> list[list[str]]:
+    """Split the ordered page list into contiguous runs. A page costs
+    its file size plus OPEN_COST_BYTES; a run closes before it would
+    exceed MAX_PARTITION_BYTES, so a page larger than that is a run of
+    its own."""
+    runs: list[list[str]] = []
+    run: list[str] = []
+    run_bytes = 0
+    for page in pages:
+        cost = os.path.getsize(page) + OPEN_COST_BYTES
+        if run and run_bytes + cost > MAX_PARTITION_BYTES:
+            runs.append(run)
+            run, run_bytes = [], 0
+        run.append(page)
+        run_bytes += cost
+    if run:
+        runs.append(run)
+    return runs
+
+
+def _decode_pages(pages: list[str], fields: list[str]):
+    """Rows of `pages`, in page order, as tuples of `fields`. The
+    schema is fixed from the FIRST page, but ColumnInfo is per-page
+    (helpers.go ProcessRowType is per-page too): a later page missing
+    a schema column degrades to "NULL" instead of failing the scan;
+    extra columns are dropped."""
+    for path in pages:
+        page = _read_page(path)
+        column_info = page["ColumnInfo"]
+        for row in page.get("Rows", []):
+            decoded = process_row(row["Data"], column_info)
+            yield tuple(
+                v if isinstance(v, str) else json.dumps(v, sort_keys=True)
+                for v in (decoded.get(name, NULL_STR) for name in fields)
+            )
 
 
 class TimestreamLikeDataSource(DataSource):
@@ -146,22 +196,12 @@ class TimestreamLikeReader(DataSourceReader):
         self.fields = [f.name for f in schema.fields]
 
     def partitions(self) -> list[InputPartition]:
-        # one partition per result page — the unit of parallel decode
-        return [InputPartition(p) for p in self.pages]
+        # one partition per contiguous run of pages — the unit of
+        # parallel decode
+        return [InputPartition(run) for run in pack_pages(self.pages)]
 
     def read(self, partition: InputPartition):
-        page = _read_page(partition.value)
-        column_info = page["ColumnInfo"]
-        for row in page.get("Rows", []):
-            decoded = process_row(row["Data"], column_info)
-            # Schema is fixed from the FIRST page, but ColumnInfo is
-            # per-page (helpers.go ProcessRowType is per-page too):
-            # a later page missing a schema column degrades to "NULL"
-            # instead of failing the scan; extra columns are dropped.
-            yield tuple(
-                v if isinstance(v, str) else json.dumps(v, sort_keys=True)
-                for v in (decoded.get(name, NULL_STR) for name in self.fields)
-            )
+        return _decode_pages(partition.value, self.fields)
 
 
 class TimestreamLikeStreamReader(SimpleDataSourceStreamReader):
@@ -184,29 +224,17 @@ class TimestreamLikeStreamReader(SimpleDataSourceStreamReader):
         # same (len, name) ordering rationale as the batch reader
         return sorted(glob.glob(f"{self.path}/page-*.json"), key=lambda p: (len(p), p))
 
-    def _decode(self, pages: list[str]):
-        for p in pages:
-            page = _read_page(p)
-            column_info = page["ColumnInfo"]
-            for row in page.get("Rows", []):
-                decoded = process_row(row["Data"], column_info)
-                yield tuple(
-                    v if isinstance(v, str) else json.dumps(v, sort_keys=True)
-                    for v in (decoded.get(name, NULL_STR) for name in self.fields)
-                )
-
     def read(self, start: dict):
         # lists, not generators: the runtime caches and (deep)copies
         # the (rows, offset) pair for prefetch replay
         pages = self._pages()
         lo = start.get("pages_read", 0)
-        return list(self._decode(pages[lo:])), {"pages_read": len(pages)}
+        return list(_decode_pages(pages[lo:], self.fields)), {"pages_read": len(pages)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         pages = self._pages()
-        return list(
-            self._decode(pages[start.get("pages_read", 0) : end.get("pages_read", 0)])
-        )
+        lo, hi = start.get("pages_read", 0), end.get("pages_read", 0)
+        return list(_decode_pages(pages[lo:hi], self.fields))
 
 
 # ------------------------------------------------------------ writer
@@ -221,7 +249,6 @@ class TimestreamLikeStreamReader(SimpleDataSourceStreamReader):
 # match the reader's page-*.json glob; abort() removes them.
 
 import dataclasses
-import os as _os
 import re as _re
 import uuid as _uuid
 
@@ -259,9 +286,9 @@ class TimestreamLikeWriter(DataSourceWriter):
         self.overwrite = overwrite
 
     def write(self, iterator) -> PageCommit:
-        _os.makedirs(self.path, exist_ok=True)
+        os.makedirs(self.path, exist_ok=True)
         rows = list(iterator)
-        staged = _os.path.join(self.path, f"stage-{_uuid.uuid4().hex}.json.tmp")
+        staged = os.path.join(self.path, f"stage-{_uuid.uuid4().hex}.json.tmp")
         with open(staged, "w") as fh:
             json.dump(_encode_page(rows, self.fields), fh, sort_keys=True)
         return PageCommit(staged=staged, rows=len(rows))
@@ -275,36 +302,36 @@ class TimestreamLikeWriter(DataSourceWriter):
 
     def _batch_pages(self) -> list[tuple[int, str]]:
         out = []
-        for p in glob.glob(_os.path.join(self.path, "page-*.json")):
+        for p in glob.glob(os.path.join(self.path, "page-*.json")):
             m = self._BATCH_PAGE_RE.search(p)
             if m:
                 out.append((int(m.group(1)), p))
         return out
 
     def _finalize(self, messages) -> None:
-        _os.makedirs(self.path, exist_ok=True)
+        os.makedirs(self.path, exist_ok=True)
         # next index = max existing batch-page number + 1: counting
         # files instead would re-issue a gapped number (crashed
         # commit, manual deletion) and clobber a live page
         nxt = max((n for n, _ in self._batch_pages()), default=-1) + 1
         for i, msg in enumerate(messages):
-            final = _os.path.join(self.path, f"page-{nxt + i:05d}.json")
+            final = os.path.join(self.path, f"page-{nxt + i:05d}.json")
             # exclusive claim: hard-link + unlink raises FileExistsError
             # if the target unexpectedly exists instead of silently
             # overwriting someone else's page
-            _os.link(msg.staged, final)
-            _os.unlink(msg.staged)
+            os.link(msg.staged, final)
+            os.unlink(msg.staged)
 
     def commit(self, messages) -> None:
         if self.overwrite:
             for _, p in self._batch_pages():
-                _os.remove(p)
+                os.remove(p)
         self._finalize(messages)
 
     def abort(self, messages) -> None:
         for msg in messages:
-            if msg is not None and _os.path.exists(msg.staged):
-                _os.remove(msg.staged)
+            if msg is not None and os.path.exists(msg.staged):
+                os.remove(msg.staged)
 
 
 class TimestreamLikeStreamWriter(DataSourceStreamWriter):
@@ -319,21 +346,21 @@ class TimestreamLikeStreamWriter(DataSourceStreamWriter):
         self.fields = fields
 
     def write(self, iterator) -> PageCommit:
-        _os.makedirs(self.path, exist_ok=True)
+        os.makedirs(self.path, exist_ok=True)
         rows = list(iterator)
-        staged = _os.path.join(self.path, f"stage-{_uuid.uuid4().hex}.json.tmp")
+        staged = os.path.join(self.path, f"stage-{_uuid.uuid4().hex}.json.tmp")
         with open(staged, "w") as fh:
             json.dump(_encode_page(rows, self.fields), fh, sort_keys=True)
         return PageCommit(staged=staged, rows=len(rows))
 
     def commit(self, messages, batchId: int) -> None:  # noqa: N803 — API name
-        for p in glob.glob(_os.path.join(self.path, f"page-b{batchId:05d}-*.json")):
-            _os.remove(p)  # idempotent replay: a batch owns its pages
+        for p in glob.glob(os.path.join(self.path, f"page-b{batchId:05d}-*.json")):
+            os.remove(p)  # idempotent replay: a batch owns its pages
         for i, msg in enumerate(messages):
-            final = _os.path.join(self.path, f"page-b{batchId:05d}-{i:05d}.json")
-            _os.replace(msg.staged, final)
+            final = os.path.join(self.path, f"page-b{batchId:05d}-{i:05d}.json")
+            os.replace(msg.staged, final)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803 — API name
         for msg in messages:
-            if msg is not None and _os.path.exists(msg.staged):
-                _os.remove(msg.staged)
+            if msg is not None and os.path.exists(msg.staged):
+                os.remove(msg.staged)
