@@ -138,3 +138,37 @@ def test_plans_md_keeps_multifile_section():
         text = fh.read()
     assert "<!-- MULTIFILE-BEGIN -->" in text
     assert "<!-- MULTIFILE-END -->" in text
+
+
+def test_operator_modules_define_no_private_caches():
+    """Shared intermediates memoize through tables.session_cached, the
+    one cache keyed on (session, fixture stamp); a module-level
+    `_…CACHE` dict in operators/ would bypass both keys."""
+    import ast
+    import os
+    import re
+
+    ops = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "timestream_travel_spark",
+        "operators",
+    )
+    found = []
+    for fname in sorted(os.listdir(ops)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(ops, fname)) as fh:
+            tree = ast.parse(fh.read())
+        for node in tree.body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            found += [
+                f"{fname}:{node.lineno} {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name) and re.fullmatch(r"_[A-Z0-9_]*CACHE", t.id)
+            ]
+    assert not found, found

@@ -39,16 +39,13 @@ def test_streaming_pq_maintenance_matches_batch_encode(spark, sf_dir, tmp_path):
     """Codes appended per micro-batch against the frozen codebook
     equal the batch encode exactly (argmin is deterministic)."""
     from timestream_travel_spark.operators.similarity6 import (
-        _BOOKS_CACHE,
         encode_pq_codes,
-        train_pq_codebooks,
+        pq_codebooks,
     )
     from timestream_travel_spark.streaming.index_maintain import maintain_pq_index
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _BOOKS_CACHE:
-        _BOOKS_CACHE[sf_dir] = train_pq_codebooks(emb)
-    books = _BOOKS_CACHE[sf_dir]
+    books = pq_codebooks(spark, sf_dir)
 
     src = str(tmp_path / "emb_src")
     emb.withColumn("bucket", (F.col("vec_id") % 3).cast("int")).write.partitionBy(

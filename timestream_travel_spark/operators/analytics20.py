@@ -31,7 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from timestream_travel_spark.operators.analytics5 import _CNT_SQL, _counts, _pair_grid
 from timestream_travel_spark.registry import query
@@ -50,18 +49,6 @@ _POOLED_SQL = f"""
       SELECT v, ct, 2 * cm - ct + 1 AS r2 FROM cum
     )
 """
-
-
-def _pooled_ranks(cnt: DataFrame) -> DataFrame:
-    pooled = cnt.groupBy("v").agg(F.sum("c").cast("bigint").alias("ct"))
-    w = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return pooled.select(
-        "v",
-        "ct",
-        (F.lit(2) * F.sum("ct").over(w) - F.col("ct") + 1).alias("r2"),
-    )
 
 
 @query(

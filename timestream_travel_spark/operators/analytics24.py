@@ -62,7 +62,7 @@ from timestream_travel_spark.operators.analytics5 import (
     _pair_grid,
 )
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 # ------------------------------------------------ Fligner–Policello
 
@@ -299,29 +299,21 @@ _GK_CELLS_SQL = """
       FROM orders GROUP BY 1, 2
 """
 
-_CELLS_CACHE: dict = {}
-
-
+@session_cached
 def _order_cells(spark: SparkSession, sf_dir: str) -> list[tuple]:
     """Collected (priority, status, count) contingency cells — the
-    ≤|priorities|·|statuses| table behind GK lambda and Theil's U,
-    cached per (session, fixture); the distributed reduce over
-    orders runs once (r16)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cells = _CELLS_CACHE.get(key)
-    if cells is None:
-        od = load_table(spark, sf_dir, "orders")
-        cells = [
-            (r.r, r.cl, r.c)
-            for r in od.groupBy(
-                F.col("o_orderpriority").alias("r"),
-                F.col("o_orderstatus").alias("cl"),
-            )
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-            .collect()
-        ]
-        _CELLS_CACHE[key] = cells
-    return cells
+    ≤|priorities|·|statuses| table behind GK lambda and Theil's U;
+    the distributed reduce over orders runs once (r16)."""
+    od = load_table(spark, sf_dir, "orders")
+    return [
+        (r.r, r.cl, r.c)
+        for r in od.groupBy(
+            F.col("o_orderpriority").alias("r"),
+            F.col("o_orderstatus").alias("cl"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .collect()
+    ]
 
 
 @query(

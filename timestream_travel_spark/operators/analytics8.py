@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 # Fixed fixture domains (same contract as retrieval.QUERY_TERMS): the
 # oracle pivots are GENERATED from these constants so both engines
@@ -50,28 +50,20 @@ _DAILY_SQL = """
 # daily-series test family (Ljung–Box, Dickey–Fuller, Friedman,
 # Kruskal–Wallis, Page, Quade, … — 26 call sites across 9 modules),
 # and each query's plan branches re-ran the events scan + reduce
-# once per branch. Materialized once per (session, fixture) — the
-# analytics5._counts / clusterqual3._family_cached precedent: the
-# first consumer pays the build inside its own timed region; the
-# persisted table is |types|×|days| rows of exact DECIMAL sums
-# (order-independent, so persisting cannot change any value).
-_DAILY_CACHE: dict = {}
-
-
+# once per branch. The persisted table is |types|×|days| rows of
+# exact DECIMAL sums (order-independent, so persisting cannot change
+# any value).
+@session_cached
 def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _DAILY_CACHE.get(key)
-    if df is None:
-        ev = load_table(spark, sf_dir, "events")
-        df = (
-            ev.groupBy(
-                F.col("event_type").alias("t"), F.date_trunc("day", "ts").alias("day")
-            )
-            .agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
-            .persist()
+    ev = load_table(spark, sf_dir, "events")
+    df = (
+        ev.groupBy(
+            F.col("event_type").alias("t"), F.date_trunc("day", "ts").alias("day")
         )
-        df.count()  # materialize once, eagerly
-        _DAILY_CACHE[key] = df
+        .agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
+        .persist()
+    )
+    df.count()  # materialize once, eagerly
     return df
 
 

@@ -44,17 +44,6 @@ _J_SQL = (
 )
 
 
-def _j_col():
-    expr = None
-    for i, t in enumerate(EVENT_TYPES):
-        expr = (
-            F.when(F.col("t") == t, i + 1)
-            if expr is None
-            else expr.when(F.col("t") == t, i + 1)
-        )
-    return expr
-
-
 @query(
     "q_page_trend",
     oracle=f"""

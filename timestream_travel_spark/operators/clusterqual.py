@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from timestream_travel_spark.functions.vectors import to_double_array
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table, spread
+from timestream_travel_spark.tables import load_table, session_cached, spread
 
 # shared CTE block: per-(label, pos) DECIMAL sufficient statistics,
 # per-label scatter, and the centroid-separation matrix
@@ -81,18 +81,10 @@ WITH x AS (
 # and within each query it feeds THREE plan branches (the scatter
 # reduce and both sides of the separation self-join) — the corpus
 # posexplode ran 3× per query, 6× across the pair. Bounded
-# (|labels|×dims rows) and exact DECIMAL, so persisting once per
-# (session, fixture) cannot change a value; the first consumer pays
-# the build in its own timed region (the analytics5._counts
-# precedent).
-_PER_CACHE: dict = {}
-
-
+# (|labels|×dims rows) and exact DECIMAL, so persisting cannot change
+# a value.
+@session_cached
 def _per_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PER_CACHE.get(key)
-    if cached is not None:
-        return cached
     e = load_table(spark, sf_dir, "embeddings")
     # spread before the explode (size-gated; see silhouette)
     x = spread(e).select(
@@ -109,7 +101,6 @@ def _per_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     df.count()  # materialize once, eagerly
-    _PER_CACHE[key] = df
     return df
 
 

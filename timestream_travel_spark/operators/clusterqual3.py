@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 from timestream_travel_spark.functions.vectors import to_double_array
 from timestream_travel_spark.operators.dedup2 import connected_components_star
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 DBSCAN_EPS2 = 1.69  # ε = 1.3 — ~10th pct of within-label distances
 DBSCAN_MINPTS = 6  # core iff |N_ε(p)| ≥ 6 (the point itself + 5 others)
@@ -109,27 +109,13 @@ def _eps_pairs(
 # reachability, and the MST all re-paid them when run back-to-back
 # in the same bench/driver session. Both tables are tiny relative to
 # the corpus (≤|ε-pairs| and |corpus| rows), so they persist for the
-# session lifetime, keyed by (applicationId, sf_dir) so a restarted
-# session never sees another session's unpersisted handles.
-_FAMILY_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _family_cached(spark: SparkSession, sf_dir: str, what: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, what)
-    df = _FAMILY_CACHE.get(key)
-    if df is None:
-        df = build().persist()
-        df.count()  # materialize once, eagerly
-        _FAMILY_CACHE[key] = df
-    return df
-
-
+# session lifetime.
+@session_cached
 def eps_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted (va, vb, label, dd) ε-pair table, built once per
-    (session, fixture)."""
-    return _family_cached(
-        spark, sf_dir, "eps_pairs", lambda: _eps_pairs(spark, sf_dir)
-    )
+    """The persisted (va, vb, label, dd) ε-pair table."""
+    df = _eps_pairs(spark, sf_dir).persist()
+    df.count()  # materialize once, eagerly
+    return df
 
 
 def _core_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -168,10 +154,12 @@ def _core_dd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_cached
 def core_dd_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted (vec_id, label, cd) core-distance table, built
-    once per (session, fixture)."""
-    return _family_cached(spark, sf_dir, "core_dd", lambda: _core_dd(spark, sf_dir))
+    """The persisted (vec_id, label, cd) core-distance table."""
+    df = _core_dd(spark, sf_dir).persist()
+    df.count()  # materialize once, eagerly
+    return df
 
 
 def _census(

@@ -59,7 +59,7 @@ from timestream_travel_spark.operators.clusterqual3 import (
     eps_pairs_cached,
 )
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 MIN_CLUSTER_SIZE = 5
 
@@ -211,16 +211,14 @@ def hdbscan_mst_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return re.join(mst.distinct(), ["va", "vb"])
 
 
+@session_cached
 def mst_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted MSF edge table (va, vb, label, mm, rk), built
-    once per (session, fixture) — the Borůvka loop is the family's
-    most job-heavy stage and both the MST query and the flat
-    clustering consume its output."""
-    from timestream_travel_spark.operators.clusterqual3 import _family_cached
-
-    return _family_cached(
-        spark, sf_dir, "hdbscan_mst", lambda: hdbscan_mst_edges(spark, sf_dir)
-    )
+    """The persisted MSF edge table (va, vb, label, mm, rk) — the
+    Borůvka loop is the family's most job-heavy stage and both the
+    MST query and the flat clustering consume its output."""
+    df = hdbscan_mst_edges(spark, sf_dir).persist()
+    df.count()  # materialize once, eagerly
+    return df
 
 
 @query("q_hdbscan_mst", oracle=_MST_ORACLE)

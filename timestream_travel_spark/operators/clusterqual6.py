@@ -64,13 +64,12 @@ from timestream_travel_spark.operators.clusterqual3 import (
     DBSCAN_EPS2,
     DBSCAN_MINPTS,
     _census,
-    _family_cached,
     _sqdist,
     clusters_from_pairs,
 )
 from timestream_travel_spark.operators.similarity2 import label_centroids
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 RING_EPS = 1.3  # same ε as the blocked family: ε² = DBSCAN_EPS2
 _RING_SLACK = 1e-6  # absolute widening of the ring test (superset-safe)
@@ -179,16 +178,13 @@ def ring_eps_pairs(spark: SparkSession, emb: DataFrame) -> DataFrame:
     )
 
 
+@session_cached
 def ring_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-persisted unblocked ε-pair table (va, vb, dd) — joins
-    the clusterqual3 family cache so ring census + ring clusters pay
-    the distance join once per (session, fixture)."""
-    return _family_cached(
-        spark,
-        sf_dir,
-        "ring_pairs",
-        lambda: ring_eps_pairs(spark, load_table(spark, sf_dir, "embeddings")),
-    )
+    """The persisted unblocked ε-pair table (va, vb, dd): ring census
+    and ring clusters pay the distance join once."""
+    df = ring_eps_pairs(spark, load_table(spark, sf_dir, "embeddings")).persist()
+    df.count()  # materialize once, eagerly
+    return df
 
 
 @query(

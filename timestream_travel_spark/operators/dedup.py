@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from timestream_travel_spark.ops import let_
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 
 def normalized_text(col: Column | str) -> Column:
@@ -287,28 +287,17 @@ def lsh_verified_pairs(
     )
 
 
-_VERIFIED_PAIRS_CACHE: dict = {}
-
-
+@session_cached
 def lsh_verified_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached canonical verified pair list (documents table,
-    threshold 0.5) — the shared INPUT of the near-dup cluster family
+    """Canonical verified pair list (documents table, threshold 0.5)
+    — the shared INPUT of the near-dup cluster family
     (q_dedup_clusters, q_dedup_keep_best, q_dedup_representatives,
     q_cluster_medoid, q_editdist_neardups), each of which re-ran the
-    whole signature → candidates → exact-verify pipeline (r16; the
-    retrieval.bm25_scores_cached precedent — ≥2 consumers, first
-    consumer pays the build in its timed region, and the family
-    flagship q_lsh_verified_jaccard keeps its uncached from-scratch
-    plan)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _VERIFIED_PAIRS_CACHE.get(key)
-    if df is None:
-        from timestream_travel_spark.tables import load_table
-
-        d = load_table(spark, sf_dir, "documents")
-        df = lsh_verified_pairs(d, threshold=0.5).localCheckpoint(eager=True)
-        _VERIFIED_PAIRS_CACHE[key] = df
-    return df
+    whole signature → candidates → exact-verify pipeline (r16). The
+    family flagship q_lsh_verified_jaccard keeps its uncached
+    from-scratch plan."""
+    d = load_table(spark, sf_dir, "documents")
+    return lsh_verified_pairs(d, threshold=0.5).localCheckpoint(eager=True)
 
 
 @query(

@@ -68,10 +68,6 @@ def _degrees_of(e: DataFrame) -> DataFrame:
     return nodes.groupBy("n").agg(F.count(F.lit(1)).alias("d"))
 
 
-def _degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _degrees_of(top_trade_edges(spark, sf_dir))
-
-
 @query(
     "q_rich_club",
     oracle=f"""

@@ -41,7 +41,7 @@ from decimal import ROUND_HALF_UP, Decimal
 import numpy as np
 from pyspark.sql import SparkSession
 
-_KIT_CACHE: dict = {}
+from timestream_travel_spark.tables import session_cached
 
 _Q4 = Decimal("1e-4")
 
@@ -54,93 +54,71 @@ def dec4(x: float) -> int:
     return int(Decimal(repr(x)).quantize(_Q4, ROUND_HALF_UP).scaleb(4))
 
 
+@session_cached
 def counts_by_type(spark: SparkSession, sf_dir: str) -> dict:
     """{t: (v float64 ascending, c int64)} — the collected counts
-    spine, cached per (session, fixture); the collect reads the
-    persisted analytics5._counts table (one cheap job after the first
-    family consumer has paid the distributed build)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    kit = _KIT_CACHE.get(key)
-    if kit is None:
-        from timestream_travel_spark.operators.analytics5 import _counts
+    spine; the collect reads the persisted analytics5._counts table
+    (one cheap job after the first family consumer has paid the
+    distributed build)."""
+    from timestream_travel_spark.operators.analytics5 import _counts
 
-        by_t: dict[str, list[tuple[float, int]]] = {}
-        for r in _counts(spark, sf_dir).collect():
-            by_t.setdefault(r.t, []).append((r.v, r.c))
-        kit = {}
-        for t, pairs in by_t.items():
-            pairs.sort()
-            kit[t] = (
-                np.array([p[0] for p in pairs], dtype=np.float64),
-                np.array([p[1] for p in pairs], dtype=np.int64),
-            )
-        _KIT_CACHE[key] = kit
+    by_t: dict[str, list[tuple[float, int]]] = {}
+    for r in _counts(spark, sf_dir).collect():
+        by_t.setdefault(r.t, []).append((r.v, r.c))
+    kit = {}
+    for t, pairs in by_t.items():
+        pairs.sort()
+        kit[t] = (
+            np.array([p[0] for p in pairs], dtype=np.float64),
+            np.array([p[1] for p in pairs], dtype=np.int64),
+        )
     return kit
 
 
-_CENTS_CACHE: dict = {}
-
-
+@session_cached
 def cents_by_type(spark: SparkSession, sf_dir: str) -> dict:
     """{t: {cents: count}} — the integer-cents census (Spark's
     round(v*100): BigDecimal(Double.toString) HALF_UP, reproduced by
-    Decimal(repr)) derived from the collected spine, cached per
-    (session, fixture); shared by the cents-quantile family
-    (trimean, HL, Wilson, GMD, Bowley–Moors)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _CENTS_CACHE.get(key)
-    if cents is None:
-        one = Decimal(1)
-        cents = {}
-        for t, (v, c) in counts_by_type(spark, sf_dir).items():
-            acc: dict[int, int] = {}
-            for x, k in zip(v.tolist(), c.tolist()):
-                vc = int(Decimal(repr(x * 100.0)).quantize(one, ROUND_HALF_UP))
-                acc[vc] = acc.get(vc, 0) + k
-            cents[t] = acc
-        _CENTS_CACHE[key] = cents
+    Decimal(repr)) derived from the collected spine; shared by the
+    cents-quantile family (trimean, HL, Wilson, GMD, Bowley–Moors)."""
+    one = Decimal(1)
+    cents = {}
+    for t, (v, c) in counts_by_type(spark, sf_dir).items():
+        acc: dict[int, int] = {}
+        for x, k in zip(v.tolist(), c.tolist()):
+            vc = int(Decimal(repr(x * 100.0)).quantize(one, ROUND_HALF_UP))
+            acc[vc] = acc.get(vc, 0) + k
+        cents[t] = acc
     return cents
 
 
-_DEC4_CACHE: dict = {}
-
-
+@session_cached
 def dec4_by_type(spark: SparkSession, sf_dir: str) -> dict:
     """{t: {scale4_int: count}} — the CAST(v AS DECIMAL(18,4)) census
-    (dec4 bridge) derived from the collected spine, cached per
-    (session, fixture); shared by the decimal-quantile family
-    (Tukey fences, trimmed/winsorized, Q-Q and Lorenz deciles)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    blocks = _DEC4_CACHE.get(key)
-    if blocks is None:
-        blocks = {}
-        for t, (v, c) in counts_by_type(spark, sf_dir).items():
-            acc: dict[int, int] = {}
-            for x, k in zip(v.tolist(), c.tolist()):
-                v4 = dec4(x)
-                acc[v4] = acc.get(v4, 0) + k
-            blocks[t] = acc
-        _DEC4_CACHE[key] = blocks
+    (dec4 bridge) derived from the collected spine; shared by the
+    decimal-quantile family (Tukey fences, trimmed/winsorized, Q-Q
+    and Lorenz deciles)."""
+    blocks = {}
+    for t, (v, c) in counts_by_type(spark, sf_dir).items():
+        acc: dict[int, int] = {}
+        for x, k in zip(v.tolist(), c.tolist()):
+            v4 = dec4(x)
+            acc[v4] = acc.get(v4, 0) + k
+        blocks[t] = acc
     return blocks
 
 
-_DAILY_ROWS_CACHE: dict = {}
-
-
+@session_cached
 def daily_rows(spark: SparkSession, sf_dir: str) -> dict:
     """{day: [(t, v Decimal)]} — the collected |types|×|days| daily
-    spine (analytics8._daily, exact DECIMAL(38,4) sums), cached per
-    (session, fixture); the within-day doubled-midrank family
-    (Friedman, Kendall's W, Quade, Page) iterates it driver-side."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    by_day = _DAILY_ROWS_CACHE.get(key)
-    if by_day is None:
-        from timestream_travel_spark.operators.analytics8 import _daily
+    spine (analytics8._daily, exact DECIMAL(38,4) sums); the
+    within-day doubled-midrank family (Friedman, Kendall's W, Quade,
+    Page) iterates it driver-side."""
+    from timestream_travel_spark.operators.analytics8 import _daily
 
-        by_day = {}
-        for r in _daily(spark, sf_dir).collect():
-            by_day.setdefault(r.day, []).append((r.t, r.v))
-        _DAILY_ROWS_CACHE[key] = by_day
+    by_day = {}
+    for r in _daily(spark, sf_dir).collect():
+        by_day.setdefault(r.day, []).append((r.t, r.v))
     return by_day
 
 

@@ -28,7 +28,7 @@ from timestream_travel_spark.operators.retrieval import (
     bm25_scores_cached,
 )
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 FB_K = 10  # feedback depth: top-10 BM25 docs estimate the model
 EXP_K = 15  # expansion terms returned
@@ -184,17 +184,15 @@ def q_ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_cached
 def ql_scores_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted (doc_id, ql_score) table, built once per
-    (session, fixture) - the bm25_scores_cached twin for the ranker-
-    agreement consumers (retrieval9's RBO, retrieval10's Kendall
-    tau). q_ql_dirichlet_topk keeps the uncached from-scratch plan
-    as the scorer's build-cost flagship."""
-    from timestream_travel_spark.operators.retrieval import _session_cached
-
-    return _session_cached(
-        spark, sf_dir, "ql_scores", lambda: ql_scores(spark, sf_dir)
-    )
+    """The persisted (doc_id, ql_score) table for the ranker-agreement
+    consumers (retrieval9's RBO, retrieval10's Kendall tau).
+    q_ql_dirichlet_topk keeps the uncached from-scratch plan as the
+    scorer's build-cost flagship."""
+    df = ql_scores(spark, sf_dir).persist()
+    df.count()  # materialize once, eagerly
+    return df
 
 
 def ql_scores(spark: SparkSession, sf_dir: str) -> DataFrame:

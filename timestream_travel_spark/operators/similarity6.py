@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from timestream_travel_spark.functions.vectors import to_double_array
 from timestream_travel_spark.operators.similarity import QUERY_VEC_ID, TOP_K, _query_vec
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import bounded_df, load_table
+from timestream_travel_spark.tables import bounded_df, load_table, session_cached
 
 PQ_M = 8  # subspaces
 PQ_D = 8  # dims per subspace (M * D = 64 = embedding dim)
@@ -68,13 +68,6 @@ def _codes_for(x, b):
     x2 = (xs**2).sum(axis=-1)[:, :, None]  # (n, M, 1)
     c2 = (b**2).sum(axis=-1)[None, :, :]  # (1, M, K)
     return np.argmin(x2 - 2.0 * xc + c2, axis=-1)  # (n, M)
-
-
-# memoized codebooks per fixture dir: training is several Spark jobs,
-# and registry builders must stay cheap to construct (the registry
-# contract tests build EVERY query) — fixtures are immutable, so the
-# learned codebook is a pure function of the sf_dir
-_BOOKS_CACHE: dict[str, list[list[list[float]]]] = {}
 
 
 def train_pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
@@ -157,6 +150,15 @@ def train_pq_codebooks(emb: DataFrame) -> list[list[list[float]]]:
     return books
 
 
+# training is several Spark jobs, and registry builders must stay
+# cheap to construct (the registry contract tests build EVERY query);
+# the learned codebook is a pure function of the embeddings fixture
+@session_cached
+def pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+    """The PQ codebooks trained on the embeddings fixture."""
+    return train_pq_codebooks(load_table(spark, sf_dir, "embeddings"))
+
+
 def _l2sq_lit(a: Column, b: list[float]) -> Column:
     lit = F.array(*[F.lit(float(x)) for x in b])
     return F.aggregate(
@@ -201,9 +203,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     build-once/read-many contract as build_minhash_index, at
     {PQ_M} ints/vector instead of raw floats."""
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _BOOKS_CACHE:
-        _BOOKS_CACHE[sf_dir] = train_pq_codebooks(emb)
-    books = _BOOKS_CACHE[sf_dir]
+    books = pq_codebooks(spark, sf_dir)
     encode_pq_codes(emb, books).write.mode("overwrite").parquet(f"{path}/codes")
     rows = [
         (m, k, [float(x) for x in books[m][k]])
@@ -288,9 +288,7 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _BOOKS_CACHE:
-        _BOOKS_CACHE[sf_dir] = train_pq_codebooks(emb)
-    books = _BOOKS_CACHE[sf_dir]
+    books = pq_codebooks(spark, sf_dir)
     qvec = _query_vec(spark, sf_dir)
     b = _np_books(books)
     q = np.asarray(qvec, dtype=np.float64).reshape(PQ_M, 1, PQ_D)

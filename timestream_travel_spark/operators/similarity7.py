@@ -37,14 +37,9 @@ from timestream_travel_spark.operators.similarity6 import (
     train_pq_codebooks,
 )
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import bounded_df, load_table
+from timestream_travel_spark.tables import bounded_df, load_table, session_cached
 
 IVFPQ_NPROBE = 3
-
-# memoized per fixture dir for the same reason as similarity6's
-# _BOOKS_CACHE: registry builders must stay cheap after first build,
-# and fixtures are immutable
-_IVFPQ_CACHE: dict[str, tuple[list, list]] = {}
 
 
 def _cents_matrix(cents):
@@ -94,18 +89,15 @@ def _residuals_df(emb: DataFrame, C) -> DataFrame:
     )
 
 
+@session_cached
 def _ivfpq_state(spark: SparkSession, sf_dir: str):
     """(cents, books): the coarse centroid list (label order) and the
-    residual PQ codebooks — bounded driver state, trained once per
-    fixture dir."""
-    if sf_dir in _IVFPQ_CACHE:
-        return _IVFPQ_CACHE[sf_dir]
+    residual PQ codebooks — bounded driver state, trained once."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = sorted(label_centroids(emb), key=lambda lc: lc[0])
     C = _cents_matrix(cents)
     resid = _residuals_df(emb, C)
     books = train_pq_codebooks(resid)
-    _IVFPQ_CACHE[sf_dir] = (cents, books)
     return cents, books
 
 

@@ -40,22 +40,17 @@ from timestream_travel_spark.operators.similarity6 import (
     PQ_K,
     PQ_M,
     PQ_SHORTLIST,
-    _BOOKS_CACHE,
     _codes_for,
     _embedding_matrix,
     _l2sq_lit,
     _np_books,
-    train_pq_codebooks,
+    pq_codebooks,
 )
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 OPQ_ITERS = 4  # (codebook step, Procrustes step) alternations
 DIM = PQ_M * PQ_D
-
-# (R, books) per fixture dir — training is several Spark jobs and the
-# registry contract test builds every query, so cache like similarity6
-_OPQ_CACHE: dict[str, tuple[list[list[float]], list[list[list[float]]]]] = {}
 
 
 def _book_partials(corpus: DataFrame, R, b):
@@ -171,21 +166,16 @@ def train_opq_on(corpus: DataFrame, init_books):
     return R.tolist(), books
 
 
+@session_cached
 def train_opq(spark: SparkSession, sf_dir: str):
     """(R, books): the learned rotation (d×d, row-major lists) and
     the rotated-space codebooks. Seeds from the plain-PQ solution
     (R = I, similarity6 codebooks) so the OPQ objective starts AT
     the PQ objective and each alternation can only lower it."""
-    if sf_dir in _OPQ_CACHE:
-        return _OPQ_CACHE[sf_dir]
     emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _BOOKS_CACHE:
-        _BOOKS_CACHE[sf_dir] = train_pq_codebooks(emb)
     v = to_double_array(F.col("embedding"))
     corpus = emb.filter(F.col("vec_id") != QUERY_VEC_ID).select(v.alias("embedding"))
-    out = train_opq_on(corpus, _BOOKS_CACHE[sf_dir])
-    _OPQ_CACHE[sf_dir] = out
-    return out
+    return train_opq_on(corpus, pq_codebooks(spark, sf_dir))
 
 
 def quantization_mse(spark: SparkSession, sf_dir: str, R, books) -> float:
@@ -294,10 +284,7 @@ def q_opq_mse_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row. Rows-only (learned state); bounded driver math."""
     import numpy as np
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    if sf_dir not in _BOOKS_CACHE:
-        _BOOKS_CACHE[sf_dir] = train_pq_codebooks(emb)
-    pq_books = _BOOKS_CACHE[sf_dir]
+    pq_books = pq_codebooks(spark, sf_dir)
     R, opq_books = train_opq(spark, sf_dir)
     eye = np.eye(DIM).tolist()
     pq_mse = quantization_mse(spark, sf_dir, eye, pq_books)

@@ -47,15 +47,13 @@ from timestream_travel_spark.operators.similarity8 import (
     train_opq_on,
 )
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
-
-# (cents, R, rotated-residual books) per fixture dir
-_OPQ_IVF_CACHE: dict[str, tuple] = {}
+from timestream_travel_spark.tables import load_table, session_cached
 
 
+@session_cached
 def _opq_ivfpq_state(spark: SparkSession, sf_dir: str):
-    if sf_dir in _OPQ_IVF_CACHE:
-        return _OPQ_IVF_CACHE[sf_dir]
+    """(cents, R, books): coarse centroids, the learned rotation and
+    the rotated-residual codebooks."""
     cents, pq_books = _ivfpq_state(spark, sf_dir)
     C = _cents_matrix(cents)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -65,9 +63,7 @@ def _opq_ivfpq_state(spark: SparkSession, sf_dir: str):
         .select("embedding")
     )
     R, books = train_opq_on(resid, pq_books)
-    out = (cents, R, books)
-    _OPQ_IVF_CACHE[sf_dir] = out
-    return out
+    return cents, R, books
 
 
 @query("q_opq_ivfpq_topk")

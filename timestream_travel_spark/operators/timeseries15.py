@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 AROON_W = 14  # Aroon lookback (days)
 ATR_W = 14  # ATR smoothing window (days)
@@ -59,25 +59,16 @@ def _daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # r15: the daily OHLC table is the spine of the entire indicator
 # family (Aroon, ATR/Keltner, ADX/DMI, SAR, Ichimoku, SuperTrend, …
 # — 29 call sites across 13 timeseries modules), and every query
-# re-ran the events scan + two reduces per plan branch. Materialized
-# once per (session, fixture) — the analytics5._counts /
-# clusterqual3._family_cached precedent: the first consumer pays the
-# build inside its own timed region; the persisted table is
-# |types|×|days| rows of exact DECIMAL sums / struct extrema
+# re-ran the events scan + two reduces per plan branch. The persisted
+# table is |types|×|days| rows of exact DECIMAL sums / struct extrema
 # (order-independent, so persisting cannot change any value).
-_OHLC_CACHE: dict = {}
-
-
+@session_cached
 def _daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily open/high/low/close of the hourly DECIMAL level series.
 
     Open/close use lexicographic struct extrema on (hour, value) —
     the first/last hour's level with a deterministic policy shared by
     both engines (hours within a day are unique, so there is no tie)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _OHLC_CACHE.get(key)
-    if cached is not None:
-        return cached
     ev = load_table(spark, sf_dir, "events")
     hourly = ev.groupBy(
         F.col("event_type").alias("t"),
@@ -95,7 +86,6 @@ def _daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).persist()
     df.count()  # materialize once, eagerly
-    _OHLC_CACHE[key] = df
     return df
 
 

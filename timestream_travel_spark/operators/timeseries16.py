@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from timestream_travel_spark.registry import query
-from timestream_travel_spark.tables import load_table
+from timestream_travel_spark.tables import load_table, session_cached
 
 MP_W = 24  # matrix-profile subsequence length (hours: one day)
 MP_EXCL = MP_W // 2  # trivial-match exclusion zone (|i-j| >= excl)
@@ -60,34 +60,25 @@ _HOURLY_IDX_SQL = """
 """
 
 
-_HOURLY_CACHE: dict = {}
-
-
+@session_cached
 def _hourly_idx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(t, hr, v, i): exact-DECIMAL hourly levels with a dense
     per-type sequence index (row_number over observed hours).
 
-    r16: session-cached (the analytics5._counts / analytics8._daily
-    precedent) — the table is |types|×|observed hours| rows of exact
-    DECIMAL aggregates (bounded by the calendar, not event volume)
-    and is the spine of the whole hourly-series family
+    r16: session-cached — the table is |types|×|observed hours| rows
+    of exact DECIMAL aggregates (bounded by the calendar, not event
+    volume) and is the spine of the whole hourly-series family
     (timeseries16-23: entropy, matrix profile, Hurst, DFA, spectral,
     Higuchi, …); every consumer re-ran the events scan + reduce +
-    window. First consumer pays the build inside its timed region."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _HOURLY_CACHE.get(key)
-    if df is None:
-        ev = load_table(spark, sf_dir, "events")
-        hourly = ev.groupBy(
-            F.col("event_type").alias("t"),
-            F.date_trunc("hour", "ts").alias("hr"),
-        ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
-        w = Window.partitionBy("t").orderBy("hr")
-        df = hourly.withColumn(
-            "i", F.row_number().over(w).cast("bigint")
-        ).persist()
-        df.count()  # materialize once, eagerly
-        _HOURLY_CACHE[key] = df
+    window."""
+    ev = load_table(spark, sf_dir, "events")
+    hourly = ev.groupBy(
+        F.col("event_type").alias("t"),
+        F.date_trunc("hour", "ts").alias("hr"),
+    ).agg(F.sum(F.col("value").cast("decimal(20,4)")).alias("v"))
+    w = Window.partitionBy("t").orderBy("hr")
+    df = hourly.withColumn("i", F.row_number().over(w).cast("bigint")).persist()
+    df.count()  # materialize once, eagerly
     return df
 
 

@@ -54,14 +54,14 @@ def verify_backup(spark: SparkSession, dest: str, manifest: DataFrame) -> DataFr
     )
 
 
-def _fold_null_sentinels(raw: DataFrame) -> DataFrame:
+def _fold_null_sentinels(raw: DataFrame, schema: str | None = None) -> DataFrame:
     """Fold the faithful sink's "NULL" sentinel back to SQL NULL —
     but only on STRING columns: a typed (faithful=False) payload
     reads back with real types, and comparing a bigint column to
     "NULL" is an ANSI cast error. Drops the __part/__date layout
-    columns either way."""
+    columns either way, then casts to the optional DDL `schema`."""
     dtypes = dict(raw.dtypes)
-    return raw.select(
+    df = raw.select(
         *[
             F.when(F.col(c) == "NULL", None).otherwise(F.col(c)).alias(c)
             if dtypes[c] == "string"
@@ -70,6 +70,14 @@ def _fold_null_sentinels(raw: DataFrame) -> DataFrame:
             if not c.startswith("__")
         ]
     )
+    if schema:
+        from pyspark.sql.types import StructType
+
+        target = StructType.fromDDL(schema)
+        df = df.select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+        )
+    return df
 
 
 def restore_backup(
@@ -95,14 +103,7 @@ def restore_backup(
       Observation on the write job (no extra scan), before dedup;
       rows_out is read back from the written parquet."""
     raw = spark.read.json(f"{backup_dir}/__part=*/__date=*/*.json.gz")
-    df = _fold_null_sentinels(raw)
-    if schema:
-        from pyspark.sql.types import StructType
-
-        target = StructType.fromDDL(schema)
-        df = df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-        )
+    df = _fold_null_sentinels(raw, schema)
     observed = Observation()
     df = df.observe(observed, F.count(F.lit(1)).alias("rows_in"))
     if dedup_key:
@@ -218,14 +219,7 @@ def restore_as_of(
         .json(f"{backup_dir}/__part=*/__date=*/*.json.gz")
         .filter(F.col("__date") <= cutoff_day)
     )
-    df = _fold_null_sentinels(raw)
-    if schema:
-        from pyspark.sql.types import StructType
-
-        target = StructType.fromDDL(schema)
-        df = df.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-        )
+    df = _fold_null_sentinels(raw, schema)
     df = df.filter(F.to_timestamp(F.col(ts_col)) <= F.to_timestamp(F.lit(cutoff)))
     df.write.mode("overwrite").parquet(dest)
     return {"rows_out": spark.read.parquet(dest).count()}

@@ -13,10 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_csv(
     spark: SparkSession, path: str, schema: str | None = None, header: bool = True
 ) -> DataFrame:
